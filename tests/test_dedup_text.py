@@ -1,5 +1,6 @@
 """Dedup / text / similarity operator tests on synthetic + real fixtures."""
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -292,16 +293,143 @@ def test_remove_boilerplate_within_doc_repeat_not_boilerplate(spark):
 def test_dedup_fuzzy_linear_output(docs):
     got = {
         r["doc_id"]: (r["component"], r["is_canonical"])
-        for r in dedup.dedup_fuzzy(
-            docs,
-            pair_fn=lambda reps: dedup.minhash_lsh_pairs(reps, threshold=0.5),
-        ).collect()
+        for r in dedup.dedup_fuzzy(docs, threshold=0.5).collect()
     }
     assert len(got) == 6  # one row per input doc, always
     # 1,2,3 exact dups; 4 near-dup of the group rep => one cluster, canon 1
     assert got[1] == (1, True)
     assert got[2] == (1, False) and got[3] == (1, False) and got[4] == (1, False)
     assert got[5] == (5, True) and got[6] == (6, True)
+
+
+def _fuzzy_corpus():
+    """(ids, texts): random word docs plus case/whitespace exact copies,
+    planted near-dup clusters (a few words replaced), a near-dup of an
+    exact copy, one NULL text and one empty text; ids shuffled and
+    non-contiguous so min-id labelling is exercised."""
+    rng = np.random.default_rng(7)
+    letters = np.array(list("abcdefghijklmnopqrstuvwxyz"))
+    vocab = ["".join(rng.choice(letters, rng.integers(3, 9))) for _ in range(400)]
+    words = [list(rng.choice(vocab, 40)) for _ in range(14)]
+
+    def edit(ws, n):
+        ws = list(ws)
+        for p in rng.choice(len(ws), n, replace=False):
+            ws[p] = str(rng.choice(vocab))
+        return ws
+
+    texts = [" ".join(ws) for ws in words]
+    texts += [" ".join(edit(words[2], 1)), " ".join(edit(words[2], 1))]
+    texts += [" ".join(edit(words[3], 1)), " ".join(edit(words[4], 2))]
+    texts += [
+        "  " + texts[0].upper().replace(" ", "   ") + " ",
+        texts[0].replace(" ", "\t"),
+        "\n" + texts[1] + "  ",
+        " ".join(edit(words[0], 1)).title(),
+        None,
+        "",
+    ]
+    ids = [int(i) for i in rng.permutation(len(texts)) * 3 + 5]
+    return ids, texts
+
+
+def _oracle_labels(ids, texts, threshold, k=5):
+    """Exact collapse (min id per normalized text), exact char-k-shingle
+    Jaccard of the representatives (numpy incidence-matrix product, kept
+    at round-half-up(J, 6) >= threshold), then union-find by min id.
+    Returns ({id: component}, representative Jaccard matrix)."""
+    norm = {i: " ".join(t.lower().split()) if t is not None else None for i, t in zip(ids, texts)}
+    rep_of: dict = {}
+    for i in sorted(ids):
+        rep_of.setdefault(norm[i], i)
+    reps = sorted(set(rep_of.values()))
+    sets = []
+    for r in reps:
+        t = norm[r] or ""
+        sets.append({t[j:j + k] for j in range(max(len(t) - k + 1, 1))})
+    col = {g: c for c, g in enumerate(sorted(set().union(*sets)))}
+    m = np.zeros((len(reps), len(col)), dtype=np.int64)
+    for row, s in enumerate(sets):
+        m[row, [col[g] for g in s]] = 1
+    inter = m @ m.T
+    size = m.sum(axis=1)
+    jac = inter / (size[:, None] + size[None, :] - inter)
+    parent = {r: r for r in reps}
+
+    def find(x):
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    keep = np.floor(jac * 1e6 + 0.5) / 1e6 >= threshold
+    for a, b in zip(*np.nonzero(np.triu(keep, 1))):
+        ra, rb = find(reps[a]), find(reps[b])
+        parent[max(ra, rb)] = min(ra, rb)
+    return {i: find(rep_of[norm[i]]) for i in ids}, jac
+
+
+def test_dedup_fuzzy_matches_exact_oracle(spark):
+    """dedup_fuzzy labels == exact collapse + exact shingle Jaccard >= t +
+    union-find, within a bounded number of Spark jobs. Every off-diagonal
+    representative Jaccard is >= 0.8 or < 0.5, far from t = 0.7, so
+    banding recall is not what this checks. NULL and empty text both
+    shingle to the one whole-text window "" and so share a cluster."""
+    ids, texts = _fuzzy_corpus()
+    want, jac = _oracle_labels(ids, texts, 0.7)
+    off = jac[~np.eye(len(jac), dtype=bool)]
+    assert ((off >= 0.8) | (off < 0.5)).all()
+    # 3 exact copies, 5 near-dups and NULL ~ empty: 9 merges
+    assert len(set(want.values())) == len(ids) - 9
+    df = spark.createDataFrame(list(zip(ids, texts)), "doc_id long, text string")
+    sc = spark.sparkContext
+    sc.setJobGroup("dedup-fuzzy-oracle", "dedup_fuzzy job cap")
+    try:
+        rows = dedup.dedup_fuzzy(df).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup("dedup-fuzzy-oracle")
+    assert {r["doc_id"]: r["component"] for r in rows} == want
+    assert all(r["is_canonical"] == (r["doc_id"] == r["component"]) for r in rows)
+    assert 0 < len(jobs) <= 20
+
+
+def test_pair_jaccard_matches_set_reference():
+    """The batch-wide lexsort intersection of the verify kernel equals
+    per-pair Python set Jaccard over the normalized char-5-shingles,
+    including short, empty, NULL and non-ASCII texts."""
+    import re
+
+    from traildb_spark.functions.vectorized import _pair_jaccard
+
+    rng = np.random.default_rng(3)
+    alphabet = list("ab cé\tZ")
+    texts = ["".join(rng.choice(alphabet, rng.integers(0, 30))) for _ in range(400)]
+    texts_a = texts[:200] + [None, "", "abc", None]
+    texts_b = texts[200:] + ["", None, "ABC ", None]
+
+    def shingles(t):
+        t = re.sub(r"\s+", " ", (t or "").lower(), flags=re.ASCII).strip()
+        return {t[i:i + 5] for i in range(max(len(t) - 4, 1))}
+
+    want = [
+        len(shingles(x) & shingles(y)) / len(shingles(x) | shingles(y))
+        for x, y in zip(texts_a, texts_b)
+    ]
+    assert _pair_jaccard(texts_a, texts_b, 5).tolist() == want
+    assert _pair_jaccard([], [], 5).size == 0
+
+
+def test_dedup_fuzzy_releases_intermediates(spark, docs):
+    """Only the signature pass the returned plans still read stays
+    pinned: band, candidate and edge tables are released on return."""
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = persisted().size()
+    assert len(dedup.dedup_fuzzy(docs, threshold=0.5).collect()) == 6
+    assert persisted().size() - before <= 1
+    before = persisted().size()
+    assert len(dedup.minhash_lsh_pairs(docs, threshold=0.5).collect()) > 0
+    assert persisted().size() - before <= 1
 
 
 def test_minhash_max_bucket_skips_degenerate_buckets(spark):

@@ -158,23 +158,22 @@ def char_shingle_hashes_udf(text: Column, k: int = 5) -> Column:
     return sh(text)
 
 
-def _char_shingle_flat(
-    texts: list, k: int
-) -> tuple[list[np.ndarray], np.ndarray, np.ndarray]:
-    """Batch-flattened FNV rolling-hash char shingling (see
-    char_shingle_hashes_udf for semantics). Returns (per-doc sorted
-    distinct arrays, their concatenation, per-doc start offsets)."""
+def _char_shingle_windows(texts: list, k: int) -> tuple[np.ndarray, np.ndarray]:
+    """Every char-k-window FNV rolling hash of a batch (uint64, duplicates
+    kept, texts in order) and the index of the text each came from (see
+    char_shingle_hashes_udf for semantics). A text shorter than k chars,
+    empty included, is one whole-text window."""
     P = np.uint64(1099511628211)  # FNV prime
     powers = P ** np.arange(k, dtype=np.uint64)[::-1]
     lens = np.fromiter((len(t) for t in texts), dtype=np.int64, count=len(texts))
-    out: list = [None] * len(texts)
-    # short docs (< k chars, incl. empty): whole-text polynomial
+    counts = np.maximum(lens - (k - 1), 1)
+    pos = np.concatenate(([0], np.cumsum(counts)[:-1]))
+    h = np.empty(int(counts.sum()), dtype=np.uint64)
     for i in np.nonzero(lens < k)[0]:
         c = np.frombuffer(
             texts[i].encode("utf-32-le"), dtype=np.uint32
         ).astype(np.uint64)
-        h = (c * powers[-len(c):]).sum() if len(c) else np.uint64(0)
-        out[i] = np.array([h], dtype=np.uint64).astype(np.int64)
+        h[pos[i]] = (c * powers[-len(c):]).sum() if len(c) else np.uint64(0)
     long_idx = np.nonzero(lens >= k)[0]
     if len(long_idx):
         c = np.frombuffer(
@@ -183,22 +182,30 @@ def _char_shingle_flat(
         ).astype(np.uint64)
         llens = lens[long_idx]
         offsets = np.concatenate(([0], np.cumsum(llens)[:-1]))
-        counts = llens - k + 1
         # rolling polynomial over the flat buffer: k strided
         # multiply-adds, O(N) memory (no (N, k) window matrix)
         nwin = len(c) - k + 1
         h_all = np.zeros(nwin, dtype=np.uint64)
         for j in range(k):
             h_all += c[j : j + nwin] * powers[j]
-        starts = _flat_starts(offsets, counts)
-        doc_ids = np.repeat(np.arange(len(long_idx)), counts)
-        arrays = _per_doc_sorted_unique(h_all[starts], doc_ids, len(long_idx))
-        for d, i in enumerate(long_idx):
-            out[i] = arrays[d]
+        h[_flat_starts(pos[long_idx], counts[long_idx])] = h_all[
+            _flat_starts(offsets, counts[long_idx])
+        ]
+    return h, np.repeat(np.arange(len(texts)), counts)
+
+
+def _char_shingle_flat(
+    texts: list, k: int
+) -> tuple[list[np.ndarray], np.ndarray, np.ndarray]:
+    """Batch-flattened FNV rolling-hash char shingling (see
+    char_shingle_hashes_udf for semantics). Returns (per-doc sorted
+    distinct arrays, their concatenation, per-doc start offsets)."""
+    if not texts:  # np.split on zero docs would yield one spurious entry
+        return [], np.empty(0, np.int64), np.empty(0, np.int64)
+    out = _per_doc_sorted_unique(*_char_shingle_windows(texts, k), len(texts))
     glens = np.fromiter((len(g) for g in out), dtype=np.int64, count=len(out))
-    offs = np.concatenate(([0], np.cumsum(glens)[:-1])) if out else np.empty(0, np.int64)
-    flat = np.concatenate(out) if out else np.empty(0, np.int64)
-    return out, flat, offs
+    offs = np.concatenate(([0], np.cumsum(glens)[:-1]))
+    return out, np.concatenate(out), offs
 
 
 def _minhash_from_flat(
@@ -224,8 +231,8 @@ def char_shingle_minhash_udf(
     MinHash signature in ONE Arrow pass. The shingle arrays never leave the
     Python worker — no JVM round-trip, no columnar cache of array<long>
     grams (measured ~4× the UDF cost itself), no gram arrays in any
-    shuffle. Callers re-derive exact-verify grams for the bounded survivor
-    set via char_shingle_hashes_udf on a semi-join."""
+    shuffle. Callers verify candidates from their text with
+    char_shingle_jaccard_udf."""
     a, b = _perm_params(num_hashes)
 
     @F.pandas_udf("struct<n_grams: long, sig: array<long>>")
@@ -247,6 +254,50 @@ def char_shingle_minhash_udf(
         )
 
     return gs(text)
+
+
+def _pair_jaccard(texts_a: list, texts_b: list, k: int) -> np.ndarray:
+    """Exact char-k-shingle Jaccard of each (texts_a[i], texts_b[i]) pair,
+    over the same shingle hash sets as char_shingle_hashes_udf, with ONE
+    batch-wide stable sort of every window on (pair, hash): a run of equal
+    keys is one distinct shingle of the pair, in A when its first window
+    is from text a (a's windows precede b's in the input, and the sort
+    keeps that order), in B when its last one is from text b."""
+    n = len(texts_a)
+    if n == 0:
+        return np.empty(0)
+    h, doc = _char_shingle_windows(
+        [_pynorm(t or "") for t in texts_a] + [_pynorm(t or "") for t in texts_b], k
+    )
+    pair = doc % n
+    order = np.lexsort((h, pair))
+    h, pair, in_b = h[order], pair[order], doc[order] >= n
+    first = np.ones(len(h), dtype=bool)
+    first[1:] = (pair[1:] != pair[:-1]) | (h[1:] != h[:-1])
+    starts = np.nonzero(first)[0]
+    in_a = ~in_b[starts]
+    in_b = in_b[np.append(starts[1:], len(h)) - 1]
+    owner = pair[starts]
+    size_a = np.bincount(owner, weights=in_a, minlength=n)
+    size_b = np.bincount(owner, weights=in_b, minlength=n)
+    inter = np.bincount(owner, weights=in_a & in_b, minlength=n)
+    # every text has at least one window, so the union is never empty
+    return inter / (size_a + size_b - inter)
+
+
+def char_shingle_jaccard_udf(a: Column, b: Column, k: int = 5) -> Column:
+    """(text_a, text_b) → exact char-k-shingle Jaccard, in ONE Arrow pass
+    over the candidate pairs: no gram arrays are cached, joined or
+    shuffled, and text moves at one byte per ASCII character where the
+    gram arrays took eight per shingle. Marked nondeterministic so that a
+    filter on the result is not pushed below its projection, which would
+    inline the UDF there and run the pass twice."""
+
+    @F.pandas_udf("double")
+    def jac(xs: pd.Series, ys: pd.Series) -> pd.Series:
+        return pd.Series(_pair_jaccard(list(xs), list(ys), k))
+
+    return jac.asNondeterministic()(a, b)
 
 
 def word_ngram_hashes_udf(text: Column, n: int = 3) -> Column:

@@ -371,6 +371,114 @@ def minhash_signature(grams: Column, num_hashes: int = 64) -> Column:
     return minhash_signatures(base_hashes, num_hashes)
 
 
+def _minhash_pass(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    shingle_k: int,
+    num_hashes: int,
+    collapse: bool,
+) -> DataFrame:
+    """The ONE per-document Arrow pass of the MinHash pipeline: fused
+    char-shingle hashing + signature (the gram arrays are born and die in
+    the Python worker), persisted and filled before any consumer starts —
+    its consumers (both sides of the band self-join, the verify joins and,
+    for ``dedup_fuzzy``, the output's representative map) would otherwise
+    each re-run the UDF.
+
+    Rows are (id, [__rep,] __text, sig); the text rides along so the
+    verify joins read the candidates' text from this one table rather
+    than rescanning ``df``. ``collapse=False``: one row per doc,
+    round-robin spread so the UDF runs on every core. ``collapse=True``:
+    __rep is the min id of the doc's exact-duplicate group (sha2 of the
+    normalized text, JVM-side); the explicit hash repartition on that
+    hash both spreads the docs and clusters the groups, so the window
+    needs no second shuffle. Only representatives keep their text and are
+    shingled — copies carry a NULL text and a sig that is never read."""
+    from ..functions.vectorized import char_shingle_minhash_udf
+
+    ident = F.col(id_col).alias("id")
+    text = F.col(text_col)
+    if not collapse:
+        rows = _spread(df).select(ident, text.alias("__text"))
+        keep = ["id"]
+    else:
+        n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        rows = (
+            df.select(ident, text.alias("__text"),
+                      F.sha2(normalize_text(text), 256).alias("__h"))
+            .repartition(n, "__h")
+            .withColumn("__rep", F.min("id").over(Window.partitionBy("__h")))
+            .withColumn("__text", F.when(F.col("id") == F.col("__rep"), F.col("__text")))
+        )
+        keep = ["id", "__rep"]
+    base = _materialize(
+        rows.select(
+            *keep,
+            "__text",
+            char_shingle_minhash_udf(F.col("__text"), shingle_k, num_hashes)
+            .getField("sig").alias("sig"),
+        )
+    )
+    base.count()
+    return base
+
+
+def _lsh_candidates(
+    sigs: DataFrame, num_hashes: int, bands: int, max_bucket
+) -> DataFrame:
+    """Banded candidate pairs (id_a < id_b) from the (id, sig) rows of a
+    ``_minhash_pass`` table: num_hashes/bands rows per band, two docs
+    collide if any band's row-slice matches. The band rows carry ids only;
+    the shuffle key (band, band hash) is uniform by construction."""
+    rows = num_hashes // bands
+    banded = sigs.select(
+        "id",
+        F.posexplode(
+            F.array(*[F.hash(F.slice("sig", b * rows + 1, rows)) for b in range(bands)])
+        ).alias("band", "bh"),
+    )
+    banded = _cap_band_buckets(banded, max_bucket)
+    a, b = banded.alias("a"), banded.alias("b")
+    return (
+        a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.bh") == F.col("b.bh")))
+        .filter(F.col("a.id") < F.col("b.id"))
+        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        .dropDuplicates(["id_a", "id_b"])
+    )
+
+
+def _verify_candidates(
+    cand: DataFrame,
+    base: DataFrame,
+    shingle_k: int,
+    num_hashes: int,
+    threshold: float,
+) -> DataFrame:
+    """Two-stage verify of (id_a, id_b) candidates against the
+    (id, sig, __text) rows of ``base``. (1) JVM-side prune: signature
+    agreement (a zip_with count) >= threshold - 2.5σ of the 64-hash
+    estimate, so stage-1 false drops are negligible. (2) Exact
+    char-shingle Jaccard of the survivors in one Arrow pass over their
+    (text_a, text_b) pairs, kept at ``round(J, 6) >= threshold``."""
+    from ..functions.vectorized import char_shingle_jaccard_udf
+
+    est_margin = 2.5 * (0.25 / num_hashes) ** 0.5
+    side = base.select("id", "sig", "__text")
+    a, b = side.alias("a"), side.alias("b")
+    agree = F.size(
+        F.filter(F.zip_with("a.sig", "b.sig", lambda x, y: x == y), lambda v: v)
+    )
+    jac = char_shingle_jaccard_udf(F.col("a.__text"), F.col("b.__text"), shingle_k)
+    return (
+        cand.join(a, F.col("id_a") == F.col("a.id"))
+        .join(b, F.col("id_b") == F.col("b.id"))
+        .filter(agree / F.lit(float(num_hashes)) >= F.lit(threshold - est_margin))
+        .select("id_a", "id_b", F.round(jac, 6).alias("jaccard"))
+        .filter(F.col("jaccard") >= threshold)
+    )
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -386,10 +494,17 @@ def minhash_lsh_pairs(
 
     num_hashes/bands rows per band; two docs collide if any band's row-slice
     matches exactly. With 64 hashes / 16 bands (r=4) the S-curve knee sits
-    near Jaccard ~0.5-0.6. ``verify=True`` re-checks candidates with exact
-    shingle Jaccard >= threshold (false positives removed; the standard
-    LSH-then-verify pipeline). Shuffle key = (band_idx, band_hash):
-    uniformly distributed by construction.
+    near Jaccard ~0.5-0.6. Shuffle key = (band_idx, band_hash): uniformly
+    distributed by construction.
+
+    Pipeline (shared with ``dedup_fuzzy``): ONE Arrow pass per doc computes
+    the char-shingle MinHash signature, persisted and filled before the
+    band self-join reads it; ``verify=True`` then prunes candidates
+    JVM-side on signature agreement (>= threshold - 2.5σ) and checks the
+    survivors' exact shingle Jaccard >= threshold in one Arrow pass over
+    their text pairs (false positives removed; the standard
+    LSH-then-verify pipeline). Only the signature table stays pinned —
+    the returned plan reads it.
 
     ``max_bucket`` is the skew guard: a band bucket of B members emits B²
     candidate rows, and low-entropy corpora (templates, boilerplate, tiny
@@ -401,97 +516,11 @@ def minhash_lsh_pairs(
     magnitude. None = exact banding semantics (the oracle-checked default);
     production fuzzy dedup (``dedup_fuzzy``) caps at 64.
     """
-    from ..functions.vectorized import char_shingle_hashes_udf, char_shingle_minhash_udf
-
-    rows = num_hashes // bands
-    # Fused shingle+signature UDF: gram arrays stay inside the Python
-    # worker; only (id, n_grams, sig) is cached — 64 longs per doc, cheap
-    # columnar cache, nothing heavy in any shuffle. Exact-verify re-derives
-    # grams from text for the bounded survivor set only (see below).
-    raw = _spread(df).select(
-        F.col(id_col).alias("id"), F.col(text_col).alias("__text")
-    )
-    base = _materialize(
-        raw.select(
-            "id", char_shingle_minhash_udf(F.col("__text"), shingle_k, num_hashes).alias("gs")
-        )
-        .select("id", F.col("gs.n_grams").alias("n_grams"), F.col("gs.sig").alias("sig"))
-        .filter(F.col("n_grams") > 0)
-    )
-    sig = base.select("id", "sig")
-    # banding carries ids only — gram arrays stay out of the shuffle
-    banded = sig.select(
-        "id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.struct(
-                    b.alias("band"),
-                    F.hash(F.slice("sig", b * rows + F.lit(1), rows)).alias("bh"),
-                ),
-            )
-        ).alias("bk"),
-    ).select("id", F.col("bk.band").alias("band"), F.col("bk.bh").alias("bh"))
-    banded = _cap_band_buckets(banded, max_bucket)
-    a = banded.select(F.col("id").alias("id_a"), "band", "bh")
-    b = banded.select(F.col("id").alias("id_b"), "band", "bh")
-    cand = (
-        a.join(b, ["band", "bh"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    base = _minhash_pass(df, text_col, id_col, shingle_k, num_hashes, collapse=False)
+    cand = _lsh_candidates(base, num_hashes, bands, max_bucket)
     if not verify:
         return cand
-    # two-stage verification: (1) cheap signature-agreement estimate over
-    # the 64-long signatures prunes the (large) candidate set; (2) exact
-    # Jaccard over the full shingle arrays only for survivors. The estimate
-    # margin (2.5 sigma at 64 hashes) makes stage-1 false-drops negligible.
-    est_margin = 2.5 * (0.25 / num_hashes) ** 0.5
-    sa = sig.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
-    sb = sig.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
-
-    @F.pandas_udf("double")
-    def _sig_agree(xs: pd.Series, ys: pd.Series) -> pd.Series:
-        if len(xs) == 0:
-            return pd.Series(np.empty(0))
-        # concatenate+reshape, NOT vstack: vstack wraps every row through
-        # atleast_2d in Python (measured ~10× slower at 500k candidates)
-        X = np.concatenate(xs.to_numpy()).reshape(len(xs), -1)
-        Y = np.concatenate(ys.to_numpy()).reshape(len(ys), -1)
-        return pd.Series((X == Y).mean(axis=1))
-
-    pruned = (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn("est", _sig_agree(F.col("sig_a"), F.col("sig_b")))
-        .filter(F.col("est") >= F.lit(threshold - est_margin))
-        .select("id_a", "id_b")
-    )
-    # exact verify: grams recomputed from text for surviving ids only
-    pruned = _materialize(pruned)
-    ids = (
-        pruned.select(F.col("id_a").alias("id"))
-        .union(pruned.select(F.col("id_b").alias("id")))
-        .distinct()
-    )
-    surv = _materialize(
-        raw.join(ids, "id", "left_semi").select(
-            "id", char_shingle_hashes_udf(F.col("__text"), shingle_k).alias("grams")
-        )
-    )
-    ga = surv.select(F.col("id").alias("id_a"), F.col("grams").alias("grams_a"))
-    gb = surv.select(F.col("id").alias("id_b"), F.col("grams").alias("grams_b"))
-    return (
-        pruned.join(ga, "id_a")
-        .join(gb, "id_b")
-        .withColumn(
-            "jaccard",
-            F.round(_jaccard_hashes_udf(F.col("grams_a"), F.col("grams_b")), 6),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    return _verify_candidates(cand, base, shingle_k, num_hashes, threshold)
 
 
 # --------------------------------------------------------------------------
@@ -1365,8 +1394,10 @@ def connected_components(
             F.col("src") != F.col("dst")
         ).dropDuplicates()
     )
-    n_edges = edges.count()
-    if n_edges <= driver_threshold:
+    # one bounded collect decides the path AND feeds the driver path: at
+    # most driver_threshold + 1 edges ever reach the driver
+    rows = edges.limit(driver_threshold + 1).collect()
+    if len(rows) <= driver_threshold:
         parent: dict = {}
 
         def find(x):
@@ -1377,22 +1408,22 @@ def connected_components(
                 parent[x], x = r, parent[x]
             return r
 
-        rows = edges.collect()
         for r in rows:
             ra, rb = find(r["src"]), find(r["dst"])
             if ra != rb:
                 # union by min id so the root IS the canonical label
                 lo, hi = (ra, rb) if ra < rb else (rb, ra)
                 parent[hi] = lo
-        nodes = {x for r in rows for x in (r["src"], r["dst"])}
-        out = [(x, find(x)) for x in sorted(nodes)]
+        nodes = sorted({x for r in rows for x in (r["src"], r["dst"])})
         edges.unpersist()
         # schema follows the input id type (string doc ids are legal and
         # the distributed path below handles them — the fast path must
-        # not flip behavior on data volume)
+        # not flip behavior on data volume). A pandas frame goes to the
+        # JVM as Arrow batches: no Python worker stage to read it back.
         id_t = edges.schema["src"].dataType.simpleString()
         return pairs.sparkSession.createDataFrame(
-            out, f"id {id_t}, component {id_t}"
+            pd.DataFrame({"id": nodes, "component": [find(x) for x in nodes]}),
+            f"id {id_t}, component {id_t}",
         )
 
     # distributed path: large-star/small-star alternation
@@ -1643,7 +1674,7 @@ def dedup_fuzzy(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    pair_fn=None,
+    threshold: float = 0.7,
 ) -> DataFrame:
     """End-to-end near-duplicate removal with LINEAR output: every doc
     labeled (cluster id, is_canonical), one canonical per cluster.
@@ -1652,41 +1683,34 @@ def dedup_fuzzy(
     any all-pairs formulation emit O(g²) rows per group (measured in
     tools/scale_smoke.py: 100k docs with 20-way dup groups → 1M+ pairs,
     300s — the pairs ARE the cost, not the LSH). So collapse exact dups
-    FIRST (one hash shuffle, groups of any size become one representative),
-    run MinHash-LSH only over distinct contents, cluster the representative
-    pairs with connected components, then propagate the representative's
-    cluster to its exact copies with one broadcast-sized join.
+    FIRST, run MinHash-LSH only over distinct contents, cluster the
+    representative pairs with connected components, then propagate the
+    representative's cluster to its exact copies.
 
-    ``pair_fn(reps) -> (id_a, id_b, ...)`` defaults to
-    ``minhash_lsh_pairs``; pass a lambda to change thresholds/method.
+    The stages are ``minhash_lsh_pairs``' own (``max_bucket=64``): ONE
+    Arrow pass over every doc yields its exact-group representative (min
+    id per sha2 of the normalized text) and, for representatives, the
+    MinHash signature — persisted and filled once, and read by both the
+    banding and the output's representative map. Candidates are pruned
+    JVM-side on signature agreement and verified by exact char-5-shingle
+    Jaccard ``round(J, 6) >= threshold`` in one Arrow pass over their text
+    pairs. Connected components run eagerly; every intermediate but the
+    signature pass (which the returned plan reads) is released on return.
     Output: (id, component, is_canonical) for EVERY input doc.
     """
-    pair_fn = pair_fn or (
-        lambda reps: minhash_lsh_pairs(reps, text_col, id_col, max_bucket=64)
+    shingle_k, num_hashes, bands = 5, 64, 16
+    base = _minhash_pass(df, text_col, id_col, shingle_k, num_hashes, collapse=True)
+    reps = base.filter(F.col("id") == F.col("__rep"))
+    cand = _lsh_candidates(reps, num_hashes, bands, max_bucket=64)
+    pairs = _verify_candidates(cand, reps, shingle_k, num_hashes, threshold)
+    comp = connected_components(pairs).select(
+        F.col("id").alias("__rep"), "component"
     )
-    h = F.sha2(normalize_text(F.col(text_col)), 256)
-    w = Window.partitionBy("__h").orderBy(F.col(id_col))
-    hashed = df.select(F.col(id_col), h.alias("__h"))
-    rep_map = hashed.withColumn("__rep", F.min(id_col).over(w)).select(
-        id_col, "__rep"
-    )
-    reps = df.join(
-        rep_map.filter(F.col(id_col) == F.col("__rep")).select(id_col), id_col
-    )
-    pairs = pair_fn(reps)
-    rep_clusters = dedup_clusters(reps, pairs.select("id_a", "id_b"), id_col)
     return (
-        rep_map.join(
-            rep_clusters.select(
-                F.col(id_col).alias("__rep"), F.col("component")
-            ),
-            "__rep",
-        )
-        .select(
-            id_col,
-            "component",
-            (F.col(id_col) == F.col("component")).alias("is_canonical"),
-        )
+        base.select(F.col("id").alias(id_col), "__rep")
+        .join(comp, "__rep", "left")
+        .select(id_col, F.coalesce("component", "__rep").alias("component"))
+        .withColumn("is_canonical", F.col(id_col) == F.col("component"))
     )
 
 
