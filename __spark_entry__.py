@@ -4315,6 +4315,7 @@ def _zdb_path(spark, sf_dir):
     filter; small parquet blocks so z-order pruning has row groups to
     skip. Cached like the media fixtures."""
     import hashlib
+    import json
     import os
 
     key = hashlib.md5(
@@ -4322,7 +4323,14 @@ def _zdb_path(spark, sf_dir):
     ).hexdigest()[:12]
     os.makedirs("/tmp/traildb_spark_media_cache", exist_ok=True)
     path = f"/tmp/traildb_spark_media_cache/zdb-{key}"
-    if not os.path.exists(os.path.join(path, "_traildb_meta.json")):
+    # finalize writes the sidecar too; only build_index's "zindex" entry
+    # marks a complete cache
+    meta = os.path.join(path, "_traildb_meta.json")
+    built = False
+    if os.path.exists(meta):
+        with open(meta) as fh:
+            built = "zindex" in json.load(fh)
+    if not built:
         ev = _events(spark, sf_dir).select(
             "uuid", "time", "event_type",
             (F.expr("time div 3600") % 24).cast("string").alias("hod"),

@@ -9,22 +9,29 @@ Maps the reference's data model (SURVEY §1) onto an idiomatic Spark layout:
   sorted by ``time`` within Parquet row groups;
 * *fields* are string columns; empty string ≡ NULL (`src/tdb.c:488-524`).
 
-The write layout IS our index (reference §2.8): ``finalize`` hash-clusters
-by uuid and sorts by (uuid, time) within files, so Parquet min/max stats
-prune both uuid point-lookups (reference O(log N) binary search,
-`src/tdb.c:552-589`) and time-range scans, and every per-trail window
-computation shuffles on a key the layout already clusters.
+The write layout is clustered, not indexed: ``finalize`` hash-clusters
+by uuid and sorts by (uuid, time) within files, so every per-trail window
+computation shuffles on a key the layout already clusters. Parquet
+min/max stats do NOT give uuid point-lookups the reference's O(log N)
+binary search (`src/tdb.c:552-589`): each hash-clustered file spans the
+whole uuid range, so a ``trail(uuid)`` reads every file (977-2458 rows
+scanned per returned row on the 60k-event benchmark store; the layout
+item in ROADMAP.md tracks row-group sizing and a uuid-range manifest).
+Time ranges prune through the optional ``time_shard`` partitions, and
+CNF filters over z-indexed columns through the ``build_index`` copy.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import warnings
 from dataclasses import dataclass
-from functools import reduce
+from functools import cached_property, reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from . import fsutil
 from .operators.filters import EventFilter, TimeRange, uuid_whitelist
@@ -56,6 +63,79 @@ def _data_fingerprint(spark: SparkSession, path: str) -> str:
     in :func:`fsutil.data_fingerprint` (also guards the persisted IVF
     artifact in ``operators.similarity``)."""
     return fsutil.data_fingerprint(spark, path)
+
+
+def _schema_json(schema: StructType) -> dict:
+    """``schema`` as a scan of the written files reports it, for the
+    sidecar: every field nullable at every depth (file sources are read
+    ``asNullable``) and ``__shard`` left out (Spark infers the partition
+    column from the paths, which needs no job)."""
+
+    def relax(t):
+        if not isinstance(t, dict):
+            return t
+        kind = t.get("type")
+        if kind == "struct":
+            return dict(t, fields=[
+                dict(f, nullable=True, type=relax(f["type"])) for f in t["fields"]
+            ])
+        if kind == "array":
+            return dict(t, containsNull=True, elementType=relax(t["elementType"]))
+        if kind == "map":
+            return dict(t, valueContainsNull=True, keyType=relax(t["keyType"]),
+                        valueType=relax(t["valueType"]))
+        return t
+
+    return relax(
+        StructType([f for f in schema.fields if f.name != SHARD_COL]).jsonValue()
+    )
+
+
+def _read_parquet(spark: SparkSession, path: str, schema: dict | None) -> DataFrame:
+    """Parquet scan of ``path``. With a recorded ``schema`` (see
+    :func:`_schema_json`) it is metadata-only: no schema-inference job."""
+    reader = spark.read
+    if schema:
+        reader = reader.schema(StructType.fromJson(schema))
+    return reader.parquet(path)
+
+
+class _ZIndex:
+    """The z-index entry of one opened dataset's sidecar, resolved on
+    first use: the fingerprint check and the scan of the copy run at most
+    once, when a covered filter first asks for them, and are shared by
+    every view derived from the opened dataset."""
+
+    def __init__(self, spark: SparkSession, db_path: str, meta: dict):
+        self.columns = list(meta["columns"])
+        self._spark = spark
+        self._db_path = db_path
+        self._meta = meta
+
+    @cached_property
+    def df(self) -> DataFrame | None:
+        zpath = f"{self._db_path}/{self._meta.get('path', ZINDEX_DIR)}"
+        # consistency guard (reference index↔data checksum,
+        # tdb_index.c:439-451): if the primary data changed since the
+        # index was built, routing would substitute STALE rows — ignore
+        # the index instead
+        if self._meta.get("data_fingerprint") != _data_fingerprint(
+            self._spark, self._db_path
+        ):
+            # surface the hidden perf cliff: the sidecar records an index
+            # but the data changed since it was built (or mtimes weren't
+            # preserved by a copy) — filters full-scan until `tdb index`
+            # is re-run
+            warnings.warn(
+                f"z-index at {zpath} is stale (data fingerprint "
+                "mismatch) and will be ignored; re-run "
+                "`tdb index` to restore pruning",
+                stacklevel=2,
+            )
+            return None
+        if not fsutil.exists(self._spark, zpath):
+            return None
+        return _read_parquet(self._spark, zpath, self._meta.get("schema"))
 
 
 def validate_field_names(names: list[str]) -> None:
@@ -191,14 +271,17 @@ class TrailDataset:
         df: DataFrame,
         db_filter: EventFilter | None = None,
         shard_fmt: str | None = None,
-        zindex: tuple[DataFrame, list[str]] | None = None,
+        zindex: _ZIndex | None = None,
+        zuuids: tuple = (),
     ):
         self._raw = df
         self._filter = db_filter
         self._shard_fmt = shard_fmt
-        # auxiliary z-ordered copy: (lazy DataFrame, indexed columns) —
-        # the reference's optional inverted-index artifact (§2.8 X1-X3)
-        self._zindex = zindex
+        # auxiliary z-ordered copy (the reference's optional
+        # inverted-index artifact, §2.8 X1-X3), still unresolved, and the
+        # uuid whitelists this view applies on top of it
+        self._zsource = zindex
+        self._zuuids = zuuids
 
     # -- constructors ------------------------------------------------------
     @classmethod
@@ -206,54 +289,44 @@ class TrailDataset:
         cls, spark: SparkSession, path: str, use_index: bool = True
     ) -> "TrailDataset":
         """Reference ``tdb_open`` (`src/tdb.c:298-393`) → lazy Parquet scan.
-        Reads the layout sidecar (shard format, z-index) when present.
 
-        Index auto-discovery (reference `tdbcli/tdb_index.c:637-662`): if
-        the sidecar records a z-ordered auxiliary copy (built by
-        ``build_index`` / ``tdb index``), it is loaded lazily and CNF
-        filters whose item-term columns are all covered by it are routed
-        there by the ``df`` property. ``use_index=False`` is the
-        reference's ``--no-index`` opt-out (`tdbcli/main.c:72-74`).
+        Metadata-only, like the reference's mmap plus table-of-contents
+        read: ``open`` reads the ``_traildb_meta.json`` sidecar and starts
+        no Spark job. The sidecar records the data-column schema that
+        ``finalize`` wrote (and ``build_index`` the z-index's), so the
+        scan is built from it instead of inferring a schema from file
+        footers; a sidecar without one (older datasets, streamed ones,
+        appended ones) falls back to inference. It also records the time
+        shard format.
+
+        Index auto-discovery (reference `tdbcli/tdb_index.c:637-662`) is
+        lazy: a z-ordered copy recorded in the sidecar (built by
+        ``build_index`` / ``tdb index``) is not checked or scanned until a
+        CNF filter whose item-term columns are all indexed reaches the
+        ``df`` property. Then, once per opened dataset and shared by every
+        ``with_filter`` / ``select_uuids`` view, the data fingerprint is
+        compared with the one recorded at build time; a stale index warns
+        at that point and is ignored, a fresh one serves the filter.
+        ``use_index=False`` is the reference's ``--no-index`` opt-out
+        (`tdbcli/main.c:72-74`).
 
         Sidecar read and fingerprint walk go through the Hadoop FS API
         (``fsutil``), so discovery works identically on file://, hdfs://
         and s3a:// — the same posture as ``compact_shards`` and the
         streaming sinks."""
-        shard_fmt = None
-        zindex = None
         raw = fsutil.read_small(spark, f"{path}/{META_FILE}")
-        if raw is not None:
-            meta = json.loads(raw)
-            shard_fmt = meta.get("time_shard")
-            zmeta = meta.get("zindex")
-            if use_index and zmeta and zmeta.get("columns"):
-                zpath = f"{path}/{zmeta.get('path', ZINDEX_DIR)}"
-                # consistency guard (reference index↔data checksum,
-                # tdb_index.c:439-451): if the primary data changed
-                # since the index was built, routing would substitute
-                # STALE rows — ignore the index instead
-                fresh = zmeta.get("data_fingerprint") == _data_fingerprint(
-                    spark, path
-                )
-                if fresh and fsutil.exists(spark, zpath):
-                    zindex = (
-                        spark.read.parquet(zpath),
-                        list(zmeta["columns"]),
-                    )
-                elif not fresh:
-                    # surface the hidden perf cliff: the sidecar records
-                    # an index but the data changed since it was built
-                    # (or mtimes weren't preserved by a copy) — filters
-                    # will full-scan until `tdb index` is re-run
-                    import warnings
-
-                    warnings.warn(
-                        f"z-index at {zpath} is stale (data fingerprint "
-                        "mismatch) and will be ignored; re-run "
-                        "`tdb index` to restore pruning",
-                        stacklevel=2,
-                    )
-        return cls(spark.read.parquet(path), shard_fmt=shard_fmt, zindex=zindex)
+        meta = json.loads(raw) if raw is not None else {}
+        zmeta = meta.get("zindex")
+        zindex = (
+            _ZIndex(spark, path, zmeta)
+            if use_index and zmeta and zmeta.get("columns")
+            else None
+        )
+        return cls(
+            _read_parquet(spark, path, meta.get("schema")),
+            shard_fmt=meta.get("time_shard"),
+            zindex=zindex,
+        )
 
     @classmethod
     def open_tdb(
@@ -280,24 +353,43 @@ class TrailDataset:
     # -- views (reference TDB_OPT_EVENT_FILTER, src/tdb.c:707-732) ---------
     def with_filter(self, f: EventFilter | None) -> "TrailDataset":
         return TrailDataset(
-            self._raw, f, shard_fmt=self._shard_fmt, zindex=self._zindex
+            self._raw, f, shard_fmt=self._shard_fmt, zindex=self._zsource,
+            zuuids=self._zuuids,
         )
+
+    @cached_property
+    def _zindex(self) -> tuple[DataFrame, list[str]] | None:
+        """(z-ordered copy with this view's uuid whitelists, indexed
+        columns), or None when there is no usable index. Resolving it runs
+        the stale check of the opened dataset, if that has not run yet."""
+        z = self._zsource
+        zdf = z.df if z is not None else None
+        if zdf is None:
+            return None
+        for uuids in self._zuuids:
+            zdf = uuid_whitelist(zdf, uuids, UUID_COL)
+        return zdf, z.columns
 
     def _index_covers(self) -> bool:
         """True when the db filter should route to the z-ordered auxiliary
-        copy: the filter has at least one item term and every item-term
+        copy: the filter has at least one item term, every item-term
         column is z-indexed (time ranges ride along — time is a sort key
-        within the z-layout). Mirrors the reference's index-match contract
-        (`tdbcli/tdb_index.c:559-631`): the index answers exactly the
-        filters whose items it covers; everything else scans the primary.
+        within the z-layout) and the index is not stale. Mirrors the
+        reference's index-match contract (`tdbcli/tdb_index.c:559-631`):
+        the index answers exactly the filters whose items it covers;
+        everything else scans the primary. Only a covered filter resolves
+        the index (see ``open``).
         """
-        if self._zindex is None or self._filter is None:
+        if self._zsource is None or self._filter is None:
             return False
         f = self._filter
         if f.match_all or f.match_none or not f.clauses:
             return False
         tf = f.term_fields()
-        return bool(tf) and tf <= set(self._zindex[1])
+        return (
+            bool(tf) and tf <= set(self._zsource.columns)
+            and self._zindex is not None
+        )
 
     @property
     def df(self) -> DataFrame:
@@ -438,20 +530,23 @@ class TrailDataset:
         The whitelist applies to BOTH layouts (primary and z-index copy)
         so a later ``with_filter`` may still route to the index without
         losing the trail restriction."""
-        zindex = self._zindex
-        if zindex is not None:
-            zindex = (uuid_whitelist(zindex[0], uuids, UUID_COL), zindex[1])
+        if not isinstance(uuids, DataFrame):
+            uuids = list(uuids)
         return TrailDataset(
             uuid_whitelist(self._raw, uuids, UUID_COL),
             self._filter,
             shard_fmt=self._shard_fmt,
-            zindex=zindex,
+            zindex=self._zsource,
+            zuuids=self._zuuids + (uuids,),
         )
 
     def trail(self, uuid: str) -> DataFrame:
         """One trail, time-ascending (reference ``tdb_get_trail`` +
-        cursor loop, `src/tdb_decode.c:122-217`). Parquet min/max on the
-        uuid-clustered layout prunes to O(few row groups)."""
+        cursor loop, `src/tdb_decode.c:122-217`). Not a binary search:
+        each hash-clustered file spans the whole uuid range, so min/max
+        stats rarely skip a file or row group and the lookup reads every
+        file (see the module docstring and the layout item in
+        ROADMAP.md)."""
         return self.df.filter(F.col(UUID_COL) == uuid.lower()).orderBy(TIME_COL)
 
     # -- merge (reference tdb_cons_append / tdb merge, SURVEY §2.4) --------
@@ -531,10 +626,29 @@ class TrailDataset:
         ``open()`` can translate time-range filters into partition
         predicates; use a lexicographically monotonic pattern
         (year-first, e.g. 'yyyy-MM-dd' or 'yyyy-MM-dd-HH').
+
+        The sidecar also records the data-column schema, taken from the
+        DataFrame being written (no read-back, no job), so ``open()``
+        needs no schema inference. ``mode="ignore"`` on an existing path
+        writes nothing and leaves the sidecar alone; ``mode="append"`` to
+        an existing path (and a dynamic partition overwrite) keeps the
+        sidecar's other entries but drops its schema, which the files
+        may no longer match, so ``open()`` infers it again.
         """
         df = self.df
+        spark = df.sparkSession
+        mode = mode.lower()
+        merge = mode == "append" or (
+            mode == "overwrite"
+            and time_shard is not None
+            and spark.conf.get("spark.sql.sources.partitionOverwriteMode").lower()
+            == "dynamic"
+        )
+        existed = (mode == "ignore" or merge) and fsutil.exists(spark, path)
+        if mode == "ignore" and existed:
+            return
         writer_df = df
-        n = num_buckets or int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        n = num_buckets or int(spark.conf.get("spark.sql.shuffle.partitions"))
         if time_shard:
             writer_df = df.withColumn(
                 SHARD_COL, _shard_expr(F.col(TIME_COL), time_shard)
@@ -546,11 +660,6 @@ class TrailDataset:
                 .partitionBy(SHARD_COL)
                 .parquet(path)
             )
-            fsutil.write_small(
-                df.sparkSession,
-                f"{path}/{META_FILE}",
-                json.dumps({"time_shard": time_shard, "timezone": "UTC"}),
-            )
         else:
             (
                 writer_df.repartition(n, F.col(UUID_COL))
@@ -558,6 +667,18 @@ class TrailDataset:
                 .write.mode(mode)
                 .parquet(path)
             )
+        meta_path = f"{path}/{META_FILE}"
+        if merge and existed:
+            raw = fsutil.read_small(spark, meta_path)
+            if raw is None and not time_shard:
+                return  # no sidecar to keep in step with the files
+            meta = json.loads(raw or "{}")
+            meta.pop("schema", None)
+        else:
+            meta = {"schema": _schema_json(df.schema)}
+        if time_shard:
+            meta.update(time_shard=time_shard, timezone="UTC")
+        fsutil.write_small(spark, meta_path, json.dumps(meta))
 
     def save_bucketed_table(
         self, name: str, num_buckets: int = 32, mode: str = "errorifexists"
@@ -693,7 +814,7 @@ class TrailDataset:
         Writes a z-ordered copy of the dataset under ``<db>/_zindex``
         (the underscore prefix keeps it invisible to the primary scan,
         like the reference's separate ``<db>/index`` file) and records
-        ``{"zindex": {"path": "_zindex", "columns": [...]}}`` in the
+        ``{"zindex": {"path": "_zindex", "columns": [...], ...}}`` in the
         ``_traildb_meta.json`` sidecar so ``open()`` discovers it
         (reference auto-discovery, `tdbcli/tdb_index.c:637-662`) and the
         ``df`` router sends covered CNF filters to it. Returns the index
@@ -717,6 +838,9 @@ class TrailDataset:
         meta["zindex"] = {
             "path": ZINDEX_DIR,
             "columns": list(cols),
+            # the copy holds the primary's columns; open() reads it with
+            # this schema instead of inferring one
+            "schema": _schema_json(ds._raw.schema),
             # ties the index to THIS data: open() drops the index when
             # the primary's files change (stale-index guard)
             "data_fingerprint": _data_fingerprint(spark, db_path),

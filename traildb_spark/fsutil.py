@@ -108,26 +108,31 @@ def list_data_files(spark, path: str) -> Iterator[tuple[str, int, int]]:
     _zindex, _staging, _traildb_commits, _SUCCESS, checksums) are
     skipped, but Hive partition dirs are KEPT even when they start with
     '_' — time shards are named '__shard=<v>', and excluding them would
-    make a sharded dataset look empty to the fingerprint."""
+    make a sharded dataset look empty to the fingerprint.
+
+    One ``listStatus`` per visible directory: hidden subtrees are pruned
+    at their root instead of being walked and filtered afterwards (a
+    recursive ``listFiles`` also descends into ``_zindex`` and resolves
+    block locations for every file). The yielded entries, and so every
+    fingerprint built on them, are the same as the recursive walk's."""
     _, hpath, fs = hfs(spark, path)
     root = hpath(path)
     if not fs.exists(root):
         return
     prefix = fs.makeQualified(root).toString().rstrip("/") + "/"
-    it = fs.listFiles(root, True)
-    while it.hasNext():
-        st = it.next()
-        p = st.getPath().toString()
-        if not p.startswith(prefix):
-            continue
-        rel = p[len(prefix):]
-        parts = rel.split("/")
-        name = parts[-1]
-        if name.startswith((".", "_")) or not name.endswith(".parquet"):
-            continue
-        if any(
-            d.startswith(".") or (d.startswith("_") and "=" not in d)
-            for d in parts[:-1]
-        ):
-            continue
-        yield rel, int(st.getLen()), int(st.getModificationTime())
+    pending = [root]
+    while pending:
+        for st in fs.listStatus(pending.pop()) or []:
+            p = st.getPath()
+            name = p.getName()
+            if st.isDirectory():
+                if not (
+                    name.startswith(".") or (name.startswith("_") and "=" not in name)
+                ):
+                    pending.append(p)
+                continue
+            if name.startswith((".", "_")) or not name.endswith(".parquet"):
+                continue
+            full = p.toString()
+            if full.startswith(prefix):
+                yield full[len(prefix):], int(st.getLen()), int(st.getModificationTime())

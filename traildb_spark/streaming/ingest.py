@@ -23,7 +23,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..dataset import TrailDataset
+from ..dataset import META_FILE, TrailDataset
 from ..fsutil import hfs as _hfs
 from ..fsutil import read_small as _fs_read_small
 from ..fsutil import swap_pointer as _fs_swap_pointer
@@ -235,13 +235,13 @@ def _finalize_batch(
     if time_shard:
         import json as _json
 
-        out = fs.create(hpath(f"{path}/_traildb_meta.json"), True)
-        out.write(
-            bytearray(
-                _json.dumps({"time_shard": time_shard, "timezone": "UTC"}), "utf-8"
-            )
+        # no "schema" entry: later batches may add files the recorded
+        # schema would not describe, so open() keeps inferring it
+        _fs_write_small(
+            spark,
+            f"{path}/{META_FILE}",
+            _json.dumps({"time_shard": time_shard, "timezone": "UTC"}),
         )
-        out.close()
     fs.mkdirs(marker.getParent())
     fs.createNewFile(marker)
     fs.delete(hpath(staging), True)
