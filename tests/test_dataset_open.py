@@ -190,6 +190,9 @@ def test_covered_filter_checks_index_once_per_open(spark, indexed_db, fingerprin
 
 
 def test_stale_warning_fires_at_first_covered_filter(spark, tmp_path, fingerprints):
+    """A data file rewritten after the index was built (here: a new
+    mtime) is seen at the first covered filter, not at open: the warning
+    fires there, once, and the filter scans the primary."""
     p = str(tmp_path / "db")
     TrailDataset(_events(spark)).finalize(p, num_buckets=2)
     TrailDataset.build_index(spark, p, ["f"])
@@ -224,24 +227,34 @@ def test_finalize_ignore_leaves_sidecar_untouched(spark, tmp_path):
     assert "extra" not in TrailDataset.open(spark, p).df.columns
 
 
-@pytest.mark.parametrize("fmt", [None, "yyyy"])
-def test_finalize_append_drops_recorded_schema(spark, tmp_path, fmt):
-    """Appending files whose schema differs from the recorded one clears
-    the sidecar's schema (open infers it again) and keeps its other
-    entries; appending to a new path records it as usual."""
+@pytest.mark.parametrize("fmt, mode", [
+    (None, "append"), ("yyyy", "append"), ("yyyy", "dynamic overwrite"),
+])
+def test_finalize_keeping_old_files_drops_recorded_schema(spark, tmp_path, fmt, mode):
+    """A write that keeps files already at the path (an append, or a
+    dynamic partition overwrite) clears the sidecar's schema, which the
+    old files may not match, so open infers it; the sidecar's other
+    entries stay. Appending to a new path records the schema as usual."""
     p = str(tmp_path / "db")
     base = _events(spark)
     TrailDataset(base).finalize(p, num_buckets=2, time_shard=fmt, mode="append")
     assert "schema" in _sidecar(p)
     TrailDataset.build_index(spark, p, ["f"])
     more = TrailDataset(base.withColumn("extra", F.lit("e")))
-    more.finalize(p, num_buckets=2, time_shard=fmt, mode="append")
+    if mode == "append":
+        more.finalize(p, num_buckets=2, time_shard=fmt, mode="append")
+    else:
+        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        try:
+            more.finalize(p, num_buckets=2, time_shard=fmt, mode="overwrite")
+        finally:
+            spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
     meta = _sidecar(p)
     assert "schema" not in meta and "zindex" in meta
     assert meta.get("time_shard") == fmt
     ds = TrailDataset.open(spark, p, use_index=False)
     assert ds._raw.schema == spark.read.parquet(p).schema
-    assert ds.df.count() == 48
+    assert ds.df.count() == (48 if mode == "append" else 24)
 
 
 def _recursive_walk(spark, path):

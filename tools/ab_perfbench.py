@@ -69,15 +69,13 @@ def value(result: dict, name: str) -> float:
     return result["report"][name]
 
 
-def summarize(name: str, better: str, pairs: list[tuple[float, float]]) -> dict:
+def summarize(better: str, pairs: list[tuple[float, float]]) -> dict:
     parent = [p for p, _ in pairs]
     change = [c for _, c in pairs]
     q1, _, q3 = statistics.quantiles(parent, n=4) if len(parent) > 1 else (0, 0, 0)
     med_p, med_c = statistics.median(parent), statistics.median(change)
     sign = 1 if better == "higher" else -1
     return {
-        "metric": name,
-        "better": better,
         "parent_median": med_p,
         "change_median": med_c,
         "parent_iqr": q3 - q1,
@@ -132,7 +130,7 @@ def main(argv=None) -> int:
     print(f"{'metric':24} {'parent':>10} {'change':>10} {'gap':>10} "
           f"{'parent IQR':>10} {'wins':>6}  gap > IQR")
     for n in names:
-        s = summarize(n, better.get(n, "higher"), [
+        s = summarize(better.get(n, "higher"), [
             (value(r["parent"], n), value(r["change"], n)) for r in runs])
         print(f"{n:24} {s['parent_median']:10.4g} {s['change_median']:10.4g} "
               f"{s['gap']:+10.4g} {s['parent_iqr']:10.4g} "

@@ -638,13 +638,14 @@ class TrailDataset:
         df = self.df
         spark = df.sparkSession
         mode = mode.lower()
-        merge = mode == "append" or (
+        # these writes keep the files already at the path
+        keeps_files = mode == "append" or (
             mode == "overwrite"
-            and time_shard is not None
+            and bool(time_shard)
             and spark.conf.get("spark.sql.sources.partitionOverwriteMode").lower()
             == "dynamic"
         )
-        existed = (mode == "ignore" or merge) and fsutil.exists(spark, path)
+        existed = (mode == "ignore" or keeps_files) and fsutil.exists(spark, path)
         if mode == "ignore" and existed:
             return
         writer_df = df
@@ -668,7 +669,7 @@ class TrailDataset:
                 .parquet(path)
             )
         meta_path = f"{path}/{META_FILE}"
-        if merge and existed:
+        if keeps_files and existed:
             raw = fsutil.read_small(spark, meta_path)
             if raw is None and not time_shard:
                 return  # no sidecar to keep in step with the files
@@ -1209,7 +1210,7 @@ def dataset_file_stats(spark: SparkSession, path: str) -> DataFrame:
     open cost on every scan — the streaming-finalize accumulation
     pattern this report exists to catch.
 
-    Pure metadata: one recursive Hadoop FS listing
+    Pure metadata: one Hadoop FS listing per visible directory
     (`fsutil.list_data_files` — the same primary-data-file rules as the
     fingerprint, so hidden/index subtrees never skew the stats),
     file-count-sized driver state, scheme-agnostic (file://, hdfs://,

@@ -111,10 +111,11 @@ def list_data_files(spark, path: str) -> Iterator[tuple[str, int, int]]:
     make a sharded dataset look empty to the fingerprint.
 
     One ``listStatus`` per visible directory: hidden subtrees are pruned
-    at their root instead of being walked and filtered afterwards (a
-    recursive ``listFiles`` also descends into ``_zindex`` and resolves
-    block locations for every file). The yielded entries, and so every
-    fingerprint built on them, are the same as the recursive walk's."""
+    at their root, never listed (a recursive ``listFiles`` would descend
+    into ``_zindex`` and resolve block locations for every file). The
+    entries must not change with the walk: the fingerprints recorded by
+    the z-index, MinHash, IVF and SQ8 artifacts are compared against
+    them."""
     _, hpath, fs = hfs(spark, path)
     root = hpath(path)
     if not fs.exists(root):
@@ -135,4 +136,5 @@ def list_data_files(spark, path: str) -> Iterator[tuple[str, int, int]]:
                 continue
             full = p.toString()
             if full.startswith(prefix):
-                yield full[len(prefix):], int(st.getLen()), int(st.getModificationTime())
+                rel = full[len(prefix):]
+                yield rel, int(st.getLen()), int(st.getModificationTime())
